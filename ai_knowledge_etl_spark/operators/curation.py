@@ -226,11 +226,10 @@ def semantic_dedup(
     from ai_knowledge_etl_spark.operators import similarity as S
 
     # The assignment feeds three consumers (both pair-join sides + the
-    # verdict join). Callers that invoke this repeatedly in one session
-    # should pass a persisted `assigned` (the registry keeps a session-
-    # keyed cache, mirroring the shingle-cache discipline) — persisting
-    # here per call would pin a new copy every invocation, the leak shape
-    # ADVICE r1 flagged in the clustering loop.
+    # verdict join). Callers should pass a persisted `assigned` (the
+    # registry passes a session.track_persist'ed one, released at batch
+    # boundaries) — an untracked persist here would pin a new copy every
+    # invocation, the leak shape ADVICE r1 flagged in the clustering loop.
     if assigned is None:
         assigned = nearest_centroid(vecs, centroids, id_col, vec_col)
     eligible = assigned

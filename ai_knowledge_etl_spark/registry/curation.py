@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from ai_knowledge_etl_spark.operators import curation as CU
 from ai_knowledge_etl_spark.operators import lm as _lm
 from ai_knowledge_etl_spark.registry import register
-from ai_knowledge_etl_spark.session import eager_cut
+from ai_knowledge_etl_spark.session import eager_cut, track_persist
 from ai_knowledge_etl_spark.sources import synthetic as syn
 from ai_knowledge_etl_spark.sources.catalog import load_table
 
@@ -79,28 +79,12 @@ from ai_knowledge_etl_spark.registry.sources_sinks import (  # noqa: E402
     _COS_PAIR_SQL,
 )
 
-# Keyed by applicationId, NOT id(spark): CPython reuses object ids after
-# GC, so an id-keyed entry could alias a persisted DataFrame bound to a
-# stopped SparkContext (round-3 advisor). applicationId is unique per
-# context; entries for other applications are evicted (and unpersisted
-# where still possible) whenever a new application touches the cache, so
-# dead sessions don't pin assignments forever.
-_SEM_ASSIGN_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 # Per-cluster size cap for the SemDeDup pair join (VERDICT r2 #2): bounds
 # the worst single-cluster fanout at cap² rows. 1000 is a deliberate
 # no-op at every fixture SF (max observed cluster: 76 at sf0.01, 326 at
 # sf0.1) while capping a degenerate corpus at 1M candidate pairs/cluster.
 _SEM_MAX_CLUSTER = 1000
 
-
-def _sem_assign_cached(spark: SparkSession, sf_dir: str, corpus, cents):
-    from ai_knowledge_etl_spark.sources.catalog import cache_get_or_fill
-
-    return cache_get_or_fill(
-        _SEM_ASSIGN_CACHE, spark, sf_dir,
-        lambda: CU.nearest_centroid(corpus, cents).persist(),
-    )
 
 _L2_SQL = """
 list_sum(list_transform(generate_series(1, len(e.embedding)),
@@ -162,10 +146,9 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = corpus.where("vec_id < 8").select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce")
     )
-    # application-keyed persisted assignment (shingle-cache discipline):
-    # the argmin runs once per (application, sf_dir) no matter how many
-    # times the query is invoked — no per-call persist pile-up
-    assigned = _sem_assign_cached(spark, sf_dir, corpus, cents)
+    # the assignment feeds three consumers (both pair-join sides + the
+    # verdict join): persisted, tracked for release_persisted()
+    assigned = track_persist(CU.nearest_centroid(corpus, cents))
     out = CU.semantic_dedup(
         corpus,
         cents,
@@ -464,42 +447,32 @@ LIMIT 100
 """.strip()
 
 
-_WARC_FIX_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _warc_corpus_fixture(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Packed-WARC probe fixture for pipeline-warc-corpus, built once per
-    (applicationId, sf_dir) and localCheckpoint'ed: the pack (synthetic
-    text derivation + WARC byte assembly) is test-INPUT construction, not
-    the pipeline under test — the _WARC_INGEST_CACHE convention. The
-    parser, gates, dedup and DSIR stages all stay live per call."""
+    """Packed-WARC probe fixture for pipeline-warc-corpus, built on every
+    call and materialized with eager_cut: the pack (synthetic text
+    derivation + WARC byte assembly) is test-INPUT construction, so the
+    pipeline under test plans over the materialized files and lookup
+    instead of over their derivation."""
     from ai_knowledge_etl_spark.registry.sources_sinks import warc_pack_files
-    from ai_knowledge_etl_spark.sources.catalog import cache_get_or_fill
 
-    def fill() -> tuple[DataFrame, DataFrame]:
-        docs = _docs(spark, sf_dir)
-        base = docs.select(
-            "doc_id", "lang", "source", F.expr(syn.PWC_TEXT_EXPR).alias("text")
-        )
-        clones = docs.where("doc_id % 10 = 5").select(
-            (F.col("doc_id") + 10000000).alias("doc_id"),
-            "lang",
-            "source",
-            F.expr(syn.PWC_CLONE_TEXT_EXPR).alias("text"),
-        )
-        corpus = base.unionByName(clones)
-        files = eager_cut(warc_pack_files(corpus, syn.url_col()))
-        lookup = eager_cut(corpus.select(
-            syn.url_col().alias("uri"), "doc_id", "lang", "source"
-        ))
-        return files, lookup
-
-    return cache_get_or_fill(
-        _WARC_FIX_CACHE, spark, sf_dir, fill, unpersist=False
+    docs = _docs(spark, sf_dir)
+    base = docs.select(
+        "doc_id", "lang", "source", F.expr(syn.PWC_TEXT_EXPR).alias("text")
     )
-
+    clones = docs.where("doc_id % 10 = 5").select(
+        (F.col("doc_id") + 10000000).alias("doc_id"),
+        "lang",
+        "source",
+        F.expr(syn.PWC_CLONE_TEXT_EXPR).alias("text"),
+    )
+    corpus = base.unionByName(clones)
+    files = eager_cut(warc_pack_files(corpus, syn.url_col()))
+    lookup = eager_cut(corpus.select(
+        syn.url_col().alias("uri"), "doc_id", "lang", "source"
+    ))
+    return files, lookup
 
 
 @register(

@@ -15,8 +15,8 @@ from ai_knowledge_etl_spark import config
 from ai_knowledge_etl_spark.functions import text as TX
 from ai_knowledge_etl_spark.operators import dedup, similarity
 from ai_knowledge_etl_spark.registry import register
-from ai_knowledge_etl_spark.session import eager_cut
-from ai_knowledge_etl_spark.sources.catalog import cache_get_or_fill, load_table
+from ai_knowledge_etl_spark.session import eager_cut, track_persist
+from ai_knowledge_etl_spark.sources.catalog import load_table
 
 # Cross-engine exact rounding (functions/parity.py): _rr_spark/_rr_duck
 # are the shared round-half-away-from-zero-over-integer-ratio helpers —
@@ -89,35 +89,23 @@ def _dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.unionByName(near).unionByName(exact)
 
 
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared + persisted across the dedup queries (jaccard/minhash/simhash
-    all start from the same shingle explode — computing it once per session
-    is what a real pipeline would do)."""
-    return cache_get_or_fill(
-        _SHINGLE_CACHE, spark, sf_dir,
-        lambda: dedup.shingles(
-            _dup_corpus(spark, sf_dir), "doc_id", "text", n=3, keep=("source",)
-        ).persist(),
+    """Distinct word-3-gram shingles over the dup corpus (SHINGLES_CTE
+    twin) — the common input of the jaccard/minhash/simhash queries."""
+    return dedup.shingles(
+        _dup_corpus(spark, sf_dir), "doc_id", "text", n=3, keep=("source",)
     )
-
-
-_CAPPED_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _shingles_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingles minus boilerplate (df cap, CAPPED_SHINGLES_CTE twin) — the
-    input to every pairwise dedup stage."""
-    return cache_get_or_fill(
-        _CAPPED_CACHE, spark, sf_dir,
-        lambda: dedup.cap_shingle_df(
-            _shingles(spark, sf_dir),
-            "doc_id",
-            config.DEDUP_SHINGLE_MAX_DF,
-            group_col="source",
-        ).persist(),
+    input to every pairwise dedup stage. The cap reads the shingle stream
+    twice (df count + anti-join), so the explode is persisted (tracked)."""
+    return dedup.cap_shingle_df(
+        track_persist(_shingles(spark, sf_dir)),
+        "doc_id",
+        config.DEDUP_SHINGLE_MAX_DF,
+        group_col="source",
     )
 
 
@@ -376,7 +364,8 @@ WHERE round(i.inter / CAST(ca.n_sh + cb.n_sh - i.inter AS DOUBLE), 4) >= 0.5
     "At 100 TB this candidate→verify shape is the whole point of LSH.",
 )
 def q_dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = _shingles_capped(spark, sf_dir)
+    # four consumers (signatures + both verify-join sides + sizes)
+    sh = track_persist(_shingles_capped(spark, sf_dir))
     pairs = dedup.minhash_lsh_candidates(sh, "doc_id", k=8, rows_per_band=2)
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingle").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("b_id"), F.col("shingle").alias("sh_b"))

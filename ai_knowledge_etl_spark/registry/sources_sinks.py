@@ -11,7 +11,7 @@ from ai_knowledge_etl_spark import config
 from ai_knowledge_etl_spark.multimodal import images as IM
 from ai_knowledge_etl_spark.operators import incremental, sinks, similarity
 from ai_knowledge_etl_spark.registry import register
-from ai_knowledge_etl_spark.session import eager_cut
+from ai_knowledge_etl_spark.session import eager_cut, scratch_dir
 from ai_knowledge_etl_spark.sources import detect
 from ai_knowledge_etl_spark.sources import pdf as PDF
 from ai_knowledge_etl_spark.sources import synthetic as syn
@@ -2148,18 +2148,14 @@ def q_udf_detect_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- partitioned write + dynamic partition overwrite ------------------------------
 
-_PART_WRITE_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _run_partitioned_write(spark: SparkSession, sf_dir: str) -> str:
     """Write documents hive-partitioned by lang, then DYNAMICALLY overwrite
     only the lang=en partition with its doc_id%2=0 half. Returns the table
     root. Every partition is repartition()ed to one task so the file
     layout (1 file per partition dir) is deterministic."""
     import os
-    import tempfile
 
-    workdir = tempfile.mkdtemp(prefix="etl_partwrite_")
+    workdir = scratch_dir("etl_partwrite_")
     table = os.path.join(workdir, "docs_by_lang")
     docs = _docs(spark, sf_dir).select("doc_id", "n_chars", "lang")
     docs.repartition("lang").write.partitionBy("lang").mode(
@@ -2203,12 +2199,7 @@ GROUP BY lang
     "date partitions without rewriting the table.",
 )
 def q_sink_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ai_knowledge_etl_spark.sources.catalog import cache_get_or_fill
-
-    table = cache_get_or_fill(
-        _PART_WRITE_CACHE, spark, sf_dir,
-        lambda: _run_partitioned_write(spark, sf_dir), unpersist=False,
-    )
+    table = _run_partitioned_write(spark, sf_dir)
     # explicit schema: an all-empty input writes a table root with no
     # partition dirs, which schema inference rejects (empty-input census)
     back = spark.read.schema("doc_id long, n_chars long, lang string").parquet(
@@ -2481,19 +2472,15 @@ def q_pipeline_image_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- transaction-log table: snapshots, time travel, compaction --------------------
 
-_TXN_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _run_txn_table(spark: SparkSession, sf_dir: str) -> str:
     """Build a 3-version transaction-log table: v0 = the English docs,
     v1 = append the German docs, v2 = COMPACT (remove every prior file,
     add one rewritten file with identical rows). Returns the table root."""
     import os
-    import tempfile
 
     from ai_knowledge_etl_spark.operators import txnlog
 
-    table = os.path.join(tempfile.mkdtemp(prefix="etl_txn_"), "docs")
+    table = os.path.join(scratch_dir("etl_txn_"), "docs")
     docs = _docs(spark, sf_dir).select("doc_id", "n_chars", "lang")
     f0 = txnlog.write_files(spark, docs.where("lang = 'en'"), table, "d0", 2)
     txnlog.commit(table, 0, adds=f0, removes=[], op="create")
@@ -2537,12 +2524,8 @@ GROUP BY v.version
 )
 def q_scan_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_knowledge_etl_spark.operators import txnlog
-    from ai_knowledge_etl_spark.sources.catalog import cache_get_or_fill
 
-    table = cache_get_or_fill(
-        _TXN_CACHE, spark, sf_dir,
-        lambda: _run_txn_table(spark, sf_dir), unpersist=False,
-    )
+    table = _run_txn_table(spark, sf_dir)
     schema = "doc_id long, n_chars long, lang string"
     out = None
     for v in (0, 1, 2):

@@ -15,9 +15,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ai_knowledge_etl_spark.registry import register
-from ai_knowledge_etl_spark.session import eager_cut
+from ai_knowledge_etl_spark.session import eager_cut, scratch_dir
 from ai_knowledge_etl_spark.sources import synthetic as syn
-from ai_knowledge_etl_spark.sources.catalog import cache_get_or_fill, load_table
+from ai_knowledge_etl_spark.sources.catalog import load_table
 from ai_knowledge_etl_spark.streaming import events as EV
 from ai_knowledge_etl_spark.streaming import frontier, politeness
 
@@ -198,27 +198,19 @@ FROM bfs GROUP BY doc_id
 """.strip()
 
 
-_BFS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def fill() -> DataFrame:
-        docs = _docs(spark, sf_dir)
-        n = docs.count()  # corpus size — same scalar the oracle's subquery computes
-        edges = docs.select(
-            F.expr("doc_id % 50").alias("src"), F.col("doc_id").alias("dst")
-        ).unionByName(
-            docs.select(
-                F.col("doc_id").alias("src"),
-                F.expr(f"(doc_id * 7 + 13) % {n}").alias("dst"),
-            )
+    docs = _docs(spark, sf_dir)
+    n = docs.count()  # corpus size — same scalar the oracle's subquery computes
+    edges = docs.select(
+        F.expr("doc_id % 50").alias("src"), F.col("doc_id").alias("dst")
+    ).unionByName(
+        docs.select(
+            F.col("doc_id").alias("src"),
+            F.expr(f"(doc_id * 7 + 13) % {n}").alias("dst"),
         )
-        seeds = docs.where("doc_id < 3").select("doc_id")
-        # three queries view the same crawl (frontier/stop/visited-state); the
-        # loop's waves are already localCheckpointed, so memoize the result
-        return frontier.bfs_frontier(edges, seeds, max_depth=3)
-
-    return cache_get_or_fill(_BFS_CACHE, spark, sf_dir, fill, unpersist=False)
+    )
+    seeds = docs.where("doc_id < 3").select("doc_id")
+    return frontier.bfs_frontier(edges, seeds, max_depth=3)
 
 
 @register(
@@ -451,8 +443,6 @@ def q_agg_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- streaming WARC ingestion ----------------------------------------------------
 
-_WARC_INGEST_CACHE: dict[tuple[str, str], str] = {}
-
 
 def _run_warc_ingest(spark: SparkSession, sf_dir: str) -> str:
     """Stage the packed WARC blobs in two waves — the second wave
@@ -460,13 +450,10 @@ def _run_warc_ingest(spark: SparkSession, sf_dir: str) -> str:
     case file-checkpointing cannot dedup) — and run two availableNow
     passes of streaming/ingest.warc_ingest_availablenow against one
     checkpoint. Returns the corpus-table path."""
-    import os
-    import tempfile
-
     from ai_knowledge_etl_spark.registry.sources_sinks import warc_pack_files
     from ai_knowledge_etl_spark.streaming import ingest
 
-    workdir = tempfile.mkdtemp(prefix="etl_warc_ingest_")
+    workdir = scratch_dir("etl_warc_ingest_")
     staging = os.path.join(workdir, "staging")
     table = os.path.join(workdir, "corpus")
     ckpt = os.path.join(workdir, "ckpt")
@@ -506,10 +493,7 @@ FROM udocs WHERE doc_id % 13 <> 0
     "record, duplicate row, or corruption leak breaks the hash.",
 )
 def q_stream_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table_path = cache_get_or_fill(
-        _WARC_INGEST_CACHE, spark, sf_dir,
-        lambda: _run_warc_ingest(spark, sf_dir), unpersist=False,
-    )
+    table_path = _run_warc_ingest(spark, sf_dir)
     # explicit schema: an empty corpus leaves a table dir with no part
     # files, which schema inference rejects (empty-input census)
     table = spark.read.schema(
@@ -524,20 +508,15 @@ def q_stream_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- streaming count-min accumulation --------------------------------------------
 
-_CMS_STREAM_CACHE: dict[tuple[str, str], str] = {}
-
 
 def _run_cms_stream(spark: SparkSession, sf_dir: str) -> str:
     """Stage events in three waves (event_id mod 3) and run one
     availableNow pass of streaming/ingest.cms_grid_availablenow after
     each wave against a single checkpoint — three epochs, three
     epoch-keyed grid directories. Returns the grid root."""
-    import os
-    import tempfile
-
     from ai_knowledge_etl_spark.streaming import ingest
 
-    workdir = tempfile.mkdtemp(prefix="etl_cms_stream_")
+    workdir = scratch_dir("etl_cms_stream_")
     staging = os.path.join(workdir, "staging")
     grids = os.path.join(workdir, "grids")
     ckpt = os.path.join(workdir, "ckpt")
@@ -588,10 +567,7 @@ ORDER BY d, bucket
     "frequency questions at 100 TB without rescanning raw events.",
 )
 def q_stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    grid_root = cache_get_or_fill(
-        _CMS_STREAM_CACHE, spark, sf_dir,
-        lambda: _run_cms_stream(spark, sf_dir), unpersist=False,
-    )
+    grid_root = _run_cms_stream(spark, sf_dir)
     parts = (
         spark.read.schema("d int, bucket long, total long")
         .option("recursiveFileLookup", "true")
@@ -641,7 +617,6 @@ def _stream_join_session(spark: SparkSession, ev: DataFrame) -> SparkSession:
 
 # --- stream-stream interval join --------------------------------------------------
 
-_SSJ_CACHE: dict[tuple[str, str], str] = {}
 _SSJ_WINDOW_S = 3600
 
 
@@ -651,10 +626,7 @@ def _run_stream_interval_join(spark: SparkSession, sf_dir: str) -> str:
     (streaming/events.streaming_interval_join: watermarks on BOTH sides +
     range condition so buffered state is evictable) in one availableNow
     pass, append the joined pairs to a parquet sink. Returns the sink path."""
-    import os
-    import tempfile
-
-    workdir = tempfile.mkdtemp(prefix="etl_ssj_")
+    workdir = scratch_dir("etl_ssj_")
     stage_c = os.path.join(workdir, "clicks")
     stage_e = os.path.join(workdir, "errors")
     out = os.path.join(workdir, "pairs")
@@ -706,8 +678,8 @@ GROUP BY e.err_id, e.user_id
     "evict buffered rows older than watermark+window instead of holding "
     "both streams forever — the property that makes this run "
     "indefinitely on an unbounded 100 TB/day event feed. Joined pairs "
-    "append to a parquet sink in one availableNow pass (cached per "
-    "session); the registered result aggregates the SINK's contents "
+    "append to a parquet sink in one availableNow pass on every call; "
+    "the registered result aggregates the SINK's contents "
     "(clicks per error + total lag), so any dropped, duplicated, or "
     "spurious pair breaks the hash against the batch-truth oracle. The "
     "batch rewrite of the same shape is join-range-window; the pair-"
@@ -715,10 +687,7 @@ GROUP BY e.err_id, e.user_id
     "test_stream_stream_interval_join_matches_batch.",
 )
 def q_stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sink_path = cache_get_or_fill(
-        _SSJ_CACHE, spark, sf_dir,
-        lambda: _run_stream_interval_join(spark, sf_dir), unpersist=False,
-    )
+    sink_path = _run_stream_interval_join(spark, sf_dir)
     pairs = spark.read.schema(
         "err_id long, err_user long, err_time timestamp, clk_time timestamp"
     ).parquet(sink_path)
@@ -734,8 +703,6 @@ def q_stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # --- stream-stream OUTER join: watermark-gated null-extension ---------------------
 
-_SSOJ_CACHE: dict[tuple[str, str], str] = {}
-
 
 def _run_stream_outer_join(spark: SparkSession, sf_dir: str) -> str:
     """Three availableNow passes against one checkpoint: (1) all real
@@ -745,12 +712,9 @@ def _run_stream_outer_join(spark: SparkSession, sf_dir: str) -> str:
     after the watermark crossing. Unmatched errors can only null-extend
     once the watermark proves no future click can match — the semantics
     this query pins down. Returns the sink path."""
-    import os
-    import tempfile
-
     from pyspark.sql import Row
 
-    workdir = tempfile.mkdtemp(prefix="etl_ssoj_")
+    workdir = scratch_dir("etl_ssoj_")
     stage_c = os.path.join(workdir, "clicks")
     stage_e = os.path.join(workdir, "errors")
     out = os.path.join(workdir, "pairs")
@@ -860,10 +824,7 @@ GROUP BY e.err_id, e.user_id
     "both the emission and the non-duplication side.",
 )
 def q_stream_outer_join_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sink_path = cache_get_or_fill(
-        _SSOJ_CACHE, spark, sf_dir,
-        lambda: _run_stream_outer_join(spark, sf_dir), unpersist=False,
-    )
+    sink_path = _run_stream_outer_join(spark, sf_dir)
     pairs = spark.read.schema(
         "err_id long, err_user long, err_time timestamp, clk_time timestamp"
     ).parquet(sink_path)
@@ -884,7 +845,6 @@ def q_stream_outer_join_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- custom stateful operator: cross-restart sessionization ------------------------
 
-_STATEFUL_SESS_CACHE: dict[tuple[str, str], str] = {}
 _SESS_GAP_S = 1800
 
 
@@ -896,12 +856,9 @@ def _run_stateful_sessionize(spark: SparkSession, sf_dir: str) -> str:
     processing from per-batch aggregation. Waves split by a global time
     threshold so each user's events arrive in order across batches.
     Returns the update-log path."""
-    import os
-    import tempfile
-
     import pandas as pd
 
-    workdir = tempfile.mkdtemp(prefix="etl_sess_state_")
+    workdir = scratch_dir("etl_sess_state_")
     staging = os.path.join(workdir, "staging")
     out = os.path.join(workdir, "updates")
     ckpt = os.path.join(workdir, "ckpt")
@@ -997,13 +954,10 @@ FROM flagged GROUP BY user_id
     "each user's final (monotone) counters and must equal the batch "
     "lag-window sessionization — any state loss between restarts "
     "undercounts events, any state corruption miscounts sessions. "
-    "Cached per session; state partitions sized to stream volume.",
+    "State partitions are sized to stream volume.",
 )
 def q_stream_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    log_path = cache_get_or_fill(
-        _STATEFUL_SESS_CACHE, spark, sf_dir,
-        lambda: _run_stateful_sessionize(spark, sf_dir), unpersist=False,
-    )
+    log_path = _run_stateful_sessionize(spark, sf_dir)
     log = spark.read.schema(
         "user_id long, n_sessions long, n_events long"
     ).parquet(log_path)
@@ -1015,8 +969,6 @@ def q_stream_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- transformWithState: typed ValueState running stats ---------------------------
 
-_TWS_STATS_CACHE: dict[tuple[str, str], str] = {}
-
 
 def _run_user_stats_tws(spark: SparkSession, sf_dir: str) -> str:
     """Two availableNow passes of streaming/stateful.UserStatsProcessor
@@ -1024,9 +976,6 @@ def _run_user_stats_tws(spark: SparkSession, sf_dir: str) -> str:
     one checkpoint on the RocksDB provider: per-user (count, value-sum)
     in a typed ValueState that must SURVIVE the stream restart between
     the two time-split waves. Returns the update-log path."""
-    import os
-    import tempfile
-
     from ai_knowledge_etl_spark.streaming import stateful
 
     if not stateful.HAS_TWS:  # pragma: no cover - no protobuf anywhere
@@ -1036,7 +985,7 @@ def _run_user_stats_tws(spark: SparkSession, sf_dir: str) -> str:
         )
     stateful.prepare_session(spark)
 
-    workdir = tempfile.mkdtemp(prefix="etl_tws_stats_")
+    workdir = scratch_dir("etl_tws_stats_")
     staging = os.path.join(workdir, "staging")
     out = os.path.join(workdir, "updates")
     ckpt = os.path.join(workdir, "ckpt")
@@ -1111,13 +1060,10 @@ FROM events GROUP BY user_id
     "PYTHONPATH routed to the TWS pre-init runner via "
     "sc.environment, which py-files do NOT reach). Update-mode "
     "emissions append to a log; the registered result takes each "
-    "user's final monotone counters. Cached per session.",
+    "user's final monotone counters.",
 )
 def q_stream_user_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    log_path = cache_get_or_fill(
-        _TWS_STATS_CACHE, spark, sf_dir,
-        lambda: _run_user_stats_tws(spark, sf_dir), unpersist=False,
-    )
+    log_path = _run_user_stats_tws(spark, sf_dir)
     log = spark.read.schema(
         "user_id long, n_events long, total_cents long"
     ).parquet(log_path)
@@ -1131,8 +1077,6 @@ def q_stream_user_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- streaming incremental MV: foreachBatch + versioned idempotent merge ----------
-
-_INC_MV_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _user_stats_partials(batch_df: DataFrame) -> DataFrame:
@@ -1157,12 +1101,9 @@ def _run_incremental_mv(spark: SparkSession, sf_dir: str) -> str:
     waves against one checkpoint prove the MV also survives a stream
     restart (wave 2's first batch must read wave 1's last version).
     Returns the final MV directory."""
-    import os
-    import tempfile
-
     from ai_knowledge_etl_spark.operators import incremental
 
-    workdir = tempfile.mkdtemp(prefix="etl_inc_mv_")
+    workdir = scratch_dir("etl_inc_mv_")
     staging = os.path.join(workdir, "staging")
     ckpt = os.path.join(workdir, "ckpt")
     mv_root = os.path.join(workdir, "mv")
@@ -1246,25 +1187,16 @@ FROM events GROUP BY user_id
     "availableNow waves against one checkpoint prove restart safety. "
     "The oracle is the plain batch groupBy truth — any double-count "
     "under replay, state loss across the restart, or merge error "
-    "breaks the hash. The batch twin is agg-incremental-refresh; "
-    "cached per session.",
+    "breaks the hash. The batch twin is agg-incremental-refresh.",
 )
 def q_stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    mv_path = cache_get_or_fill(
-        _INC_MV_CACHE,
-        spark,
-        sf_dir,
-        lambda: _run_incremental_mv(spark, sf_dir),
-        unpersist=False,
-    )
+    mv_path = _run_incremental_mv(spark, sf_dir)
     return spark.read.parquet(mv_path).select(
         "user_id", "n_events", "total_cents"
     )
 
 
 # --- stateful timers: sessions emitted on event-time TIMEOUT ----------------------
-
-_SESS_TIMEOUT_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _run_stateful_timeout(spark: SparkSession, sf_dir: str) -> str:
@@ -1275,12 +1207,9 @@ def _run_stateful_timeout(spark: SparkSession, sf_dir: str) -> str:
     Sentinel waves (negative user) push the watermark past every open
     timer, so the emission set provably converges to the batch session
     census. Three-plus-one availableNow passes, one checkpoint."""
-    import os
-    import tempfile
-
     import pandas as pd
 
-    workdir = tempfile.mkdtemp(prefix="etl_sess_timeout_")
+    workdir = scratch_dir("etl_sess_timeout_")
     staging = os.path.join(workdir, "staging")
     out = os.path.join(workdir, "sessions")
     ckpt = os.path.join(workdir, "ckpt")
@@ -1427,10 +1356,7 @@ FROM sess GROUP BY user_id, sid
     "and per-batch aggregation cannot express.",
 )
 def q_stream_stateful_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    log_path = cache_get_or_fill(
-        _SESS_TIMEOUT_CACHE, spark, sf_dir,
-        lambda: _run_stateful_timeout(spark, sf_dir), unpersist=False,
-    )
+    log_path = _run_stateful_timeout(spark, sf_dir)
     log = spark.read.schema(
         "user_id long, session_start_s long, n_events long"
     ).parquet(log_path)

@@ -17,6 +17,8 @@ Scale posture (100 TB readiness, tested on local[32]):
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -73,29 +75,42 @@ def get_spark(
 # ContextCleaner only drops the blocks once the JVM-side DataFrame is GC'd —
 # which a long benchmark session (4+ sweeps x 293 queries) reaches late, so
 # pinned storage grows across sweeps (r8 ADVICE). Operators route those
-# persists through track_persist(); batch drivers (bench.py's pass/sweep
-# boundaries) call release_persisted() to drop every tracked block
-# deterministically. Unpersist is always CORRECT (a released frame just
-# recomputes), so releasing at a boundary can never break a concurrent plan.
-_TRACKED_PERSISTS: list = []
+# persists through track_persist(); queries that stage files (streaming
+# sinks, written tables) take their workdir from scratch_dir(). Batch
+# drivers (bench.py's pass/sweep boundaries) call release_persisted() to
+# drop every tracked block and remove every scratch dir deterministically.
+# Unpersist is always CORRECT (a released frame just recomputes); a removed
+# scratch dir is not, so release only where no built frame is still unread.
+_TRACKED: list = []
 
 
 def track_persist(df):
     """df.persist() + register the frame for release_persisted()."""
     df = df.persist()
-    _TRACKED_PERSISTS.append(df)
+    _TRACKED.append(df)
     return df
 
 
+def scratch_dir(prefix: str) -> str:
+    """A fresh tmp workdir, registered for removal by release_persisted()."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _TRACKED.append(path)
+    return path
+
+
 def release_persisted() -> int:
-    """Unpersist every tracked frame (non-blocking); returns the count."""
-    n = len(_TRACKED_PERSISTS)
-    for df in _TRACKED_PERSISTS:
+    """Unpersist every tracked frame (non-blocking) and remove every
+    scratch dir; returns the count."""
+    n = len(_TRACKED)
+    for item in _TRACKED:
+        if isinstance(item, str):
+            shutil.rmtree(item, ignore_errors=True)
+            continue
         try:
-            df.unpersist()
+            item.unpersist()
         except Exception:
             pass  # session already stopped — nothing left to release
-    _TRACKED_PERSISTS.clear()
+    _TRACKED.clear()
     return n
 
 
@@ -113,17 +128,16 @@ def eager_cut(df):
 
       local     (default) eager localCheckpoint — fastest, not
                 fault-tolerant
-      persist   persist(MEMORY_AND_DISK) + count() — blocks are
-                recomputable from lineage on executor loss; lineage is
-                NOT truncated (fine for one-shot cuts; plan size grows
-                with the upstream, so pathological upstreams plan slower)
+      persist   bare persist() (MEMORY_AND_DISK_DESER in PySpark 4.1) +
+                count() — blocks are recomputable from lineage on
+                executor loss; lineage is NOT truncated (fine for
+                one-shot cuts; plan size grows with the upstream, so
+                pathological upstreams plan slower)
       reliable  checkpoint(eager=True) to the configured
                 spark.sparkContext.setCheckpointDir — fault-tolerant AND
                 truncated, at the cost of a distributed write
-      off       identity — NO materialization; measurement-only (A/B
-                probes of what a cut is worth: every lazy consumer then
-                replays the upstream per subtree). Never use in
-                production.
+
+    Any other value raises ValueError.
 
     Iterative-loop state sites (the CC label loop, BFS frontiers, the
     BPE merge loop, the sequential-id partition pin) deliberately do NOT
@@ -132,12 +146,14 @@ def eager_cut(df):
     growing tree) and on localCheckpoint's RDD-id release discipline.
     """
     mode = os.environ.get("SPARK_GRAFT_EAGER_CUT", "local")
+    if mode == "local":
+        return df.localCheckpoint()
     if mode == "persist":
         df = df.persist()
         df.count()
         return df
     if mode == "reliable":
         return df.checkpoint(eager=True)
-    if mode == "off":
-        return df
-    return df.localCheckpoint()
+    raise ValueError(
+        f"SPARK_GRAFT_EAGER_CUT={mode!r}: expected local, persist or reliable"
+    )

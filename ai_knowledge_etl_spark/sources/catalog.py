@@ -10,87 +10,17 @@ and filters early (predicate pushdown) — verified in tests via
 from __future__ import annotations
 
 import os
-
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_SHIPPED: set[str] = set()
+_SHIPPED_APP: str | None = None  # applicationId the zip was last added to
 _ZIP_PATH: str | None = None
-
-# One lock per cache object (keyed by id — the caches are module-level and
-# never collected). bench.py submits queries from concurrent threads, so an
-# unlocked sweep can race a concurrent insert ("dict changed size during
-# iteration") and an unlocked check-then-insert can double-fill an expensive
-# persist (round-3 advisor). All sweep/check/insert paths go through these.
-_CACHE_LOCKS: dict[int, threading.Lock] = {}
-_CACHE_LOCKS_GUARD = threading.Lock()
-
-
-def _lock_for(cache) -> threading.Lock:
-    with _CACHE_LOCKS_GUARD:
-        return _CACHE_LOCKS.setdefault(id(cache), threading.Lock())
-
-
-def _sweep_locked(cache, spark: SparkSession, unpersist: bool) -> str:
-    app_id = spark.sparkContext.applicationId
-    stale = [
-        k for k in list(cache)
-        if (k[0] if isinstance(k, tuple) else k) != app_id
-    ]
-    for k in stale:
-        v = cache.pop(k) if isinstance(cache, dict) else (cache.discard(k) or None)
-        if unpersist and hasattr(v, "unpersist"):
-            try:
-                v.unpersist()
-            except Exception:  # context already stopped
-                pass
-        elif isinstance(v, str):
-            # path-valued caches (staged WARC corpus, streamed sketch
-            # grids) hold per-application tmp workdirs; evicting the
-            # entry without removing the files would leak tmp space in a
-            # long-lived multi-tenant driver (round-3 verdict). Only our
-            # own etl_* workdirs under the system tmp root are touched.
-            import shutil
-            import tempfile
-
-            workdir = os.path.dirname(v)
-            if (
-                workdir.startswith(tempfile.gettempdir() + os.sep)
-                and os.path.basename(workdir).startswith("etl_")
-            ):
-                shutil.rmtree(workdir, ignore_errors=True)
-    return app_id
-
-
-def app_cache_sweep(cache, spark: SparkSession, unpersist: bool = True) -> str:
-    """applicationId for session-scoped caches, evicting other apps' entries.
-
-    Never key caches by id(spark): CPython reuses object ids after GC, so a
-    later SparkSession can alias an entry holding a DataFrame bound to a
-    stopped SparkContext (round-3 advisor). applicationId is unique per
-    context; sweeping on every touch keeps dead sessions from pinning
-    persisted frames forever. Thread-safe: sweeps run under the per-cache
-    lock."""
-    with _lock_for(cache):
-        return _sweep_locked(cache, spark, unpersist)
-
-
-def cache_get_or_fill(cache: dict, spark: SparkSession, subkey, fill,
-                      unpersist: bool = True):
-    """Sweep + membership-check + populate atomically under the per-cache lock.
-
-    `fill()` runs while the lock is held, so two concurrent first-touch
-    threads cannot double-persist the same expensive frame; distinct caches
-    use distinct locks, so unrelated fills still overlap. A fill may touch a
-    DIFFERENT cache (e.g. capped-shingles fills from the shingle cache) —
-    lock ordering is acyclic because dependencies only point one way."""
-    with _lock_for(cache):
-        key = (_sweep_locked(cache, spark, unpersist), subkey)
-        if key not in cache:
-            cache[key] = fill()
-        return cache[key]
+# Guards _SHIPPED_APP/_ZIP_PATH and _VIEWS_REGISTERED: bench.py submits
+# queries from concurrent threads, so an unlocked check-then-insert could
+# ship twice or race a sweep ("dict changed size during iteration").
+_LOCK = threading.Lock()
 
 
 def ensure_package_on_workers(spark: SparkSession) -> None:
@@ -104,10 +34,10 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     rejects an addPyFile whose basename was seen with different contents)
     and added per session. Lock-guarded: bench submits queries from
     concurrent threads."""
-    global _ZIP_PATH
-    with _lock_for(_SHIPPED):
-        sid = _sweep_locked(_SHIPPED, spark, unpersist=False)
-        if sid in _SHIPPED:
+    global _SHIPPED_APP, _ZIP_PATH
+    with _LOCK:
+        sid = spark.sparkContext.applicationId
+        if sid == _SHIPPED_APP:
             return
         if _ZIP_PATH is None:
             import shutil
@@ -124,7 +54,7 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
                 "ai_knowledge_etl_spark",
             )
         spark.sparkContext.addPyFile(_ZIP_PATH)
-        _SHIPPED.add(sid)
+        _SHIPPED_APP = sid
 
 
 TABLES = (
@@ -201,7 +131,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     dropped/overwritten sentinel view defeats the short-circuit via the
     tableExists check (~1 ms, vs ~1 s for the full re-resolve)."""
     key = (spark, os.path.abspath(sf_dir))
-    with _lock_for(_VIEWS_REGISTERED):
+    with _LOCK:
         for k in list(_VIEWS_REGISTERED):
             try:
                 dead = k[0].sparkContext._jsc is None
@@ -220,7 +150,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     dfs = load_tables(spark, sf_dir)
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
-    with _lock_for(_VIEWS_REGISTERED):
+    with _LOCK:
         _VIEWS_REGISTERED[key] = dfs
         register_views._last = key  # the views currently pointed at
     return dfs

@@ -99,6 +99,17 @@ PASSES = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def prev_cpus_of(snapshot: dict) -> tuple[int, str]:
+    """Core count a previous snapshot ran at, and its label for reports.
+    A snapshot without a cpus stamp predates round 12, and every one of
+    those was a 32-core official run, so it counts as 32: an 8-core run
+    against an unstamped snapshot is a mismatch too."""
+    cpus = snapshot.get("cpus")
+    if cpus is None:
+        return 32, "32 (unstamped)"
+    return cpus, str(cpus)
+
+
 def sf_of(path: str) -> float:
     m = re.search(r"sf([0-9.]+)", path)
     return float(m.group(1)) if m else -1.0
@@ -387,13 +398,11 @@ def main() -> None:
         if prev and prev.get("spark_method") in {
             "best_of_2_separated_sweeps",
             "best_of_2_separated_sweeps_duck_interleaved",
-        } and (prev.get("cpus") or 32) == CPUS:
+        } and prev_cpus_of(prev)[0] == CPUS:
             # (cpus guard, round-12: re-probing "regressions" against a
             # snapshot measured at a different core count wastes the solo
             # budget on core-count confounds — the delta below suppresses
-            # their significance anyway. None = pre-r12 snapshot, ALL of
-            # which were 32-core official runs — so None means 32, and an
-            # 8-core run against an unstamped snapshot is a mismatch too.)
+            # their significance anyway.)
             prev_iso = prev.get("isolated", {})
             flagged = [
                 n
@@ -812,11 +821,10 @@ def main() -> None:
         # that were core-count confounds (a query slowing at 8 cores is
         # evidence it PARALLELIZES). cpus is now stamped into every
         # snapshot; a mismatch suppresses significance and labels the
-        # report. None = pre-r12 snapshot, ALL of which were 32-core
-        # official runs — treated as 32 so that an 8-core run against an
-        # unstamped snapshot is also caught, not just stamped-vs-stamped.
+        # report (prev_cpus_of: an unstamped snapshot counts as 32).
         prev_cpus = prev_detail.get("cpus")
-        cpus_match = (prev_cpus or 32) == CPUS
+        prev_n_cpus, prev_cpus_label = prev_cpus_of(prev_detail)
+        cpus_match = prev_n_cpus == CPUS
         methods_match = (
             prev_detail.get("spark_method") == detail["spark_method"]
             and prev_detail.get("sf") == headline["sf"]
@@ -891,7 +899,7 @@ def main() -> None:
         elif not cpus_match:
             caveat = (
                 f" [CPUS MISMATCH: prev snapshot ran at"
-                f" {prev_cpus or '32 (unstamped)'} cores,"
+                f" {prev_cpus_label} cores,"
                 f" this run at {CPUS} — deltas are core-count confounds,"
                 " significance suppressed]"
             )

@@ -2,14 +2,15 @@
 reuse" materialization routes through session.eager_cut so cluster
 deployments can swap localCheckpoint for recoverable forms. Pins: the
 three modes return identical rows, 'local' truncates lineage (LogicalRDD
-plan), 'persist' keeps lineage but materializes storage, and the knob
-defaults to 'local'."""
+plan), 'persist' keeps lineage but materializes storage, the knob
+defaults to 'local', and any other value is rejected."""
 
 from __future__ import annotations
 
 import os
 from unittest import mock
 
+import pytest
 from pyspark.sql import functions as F
 
 from ai_knowledge_etl_spark.session import eager_cut
@@ -61,3 +62,11 @@ def test_local_mode_truncates_lineage_persist_keeps_it(spark):
         assert persisted.storageLevel.useMemory
     finally:
         persisted.unpersist()
+
+
+def test_unknown_mode_is_rejected(spark):
+    """SPARK_GRAFT_EAGER_CUT accepts exactly local, persist and reliable."""
+    for mode in ("off", ""):
+        with mock.patch.dict(os.environ, {"SPARK_GRAFT_EAGER_CUT": mode}):
+            with pytest.raises(ValueError):
+                eager_cut(_frame(spark))

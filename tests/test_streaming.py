@@ -534,6 +534,41 @@ def test_incremental_mv_version_chain(spark, sf_dir):
     assert mv.count() == mv.select("user_id").distinct().count()
 
 
+def test_stream_stream_interval_join_runs_on_every_build(spark, sf_dir):
+    """Each build of stream-stream-interval-join runs its own streaming
+    query into its own scratch dir (a repeated query must not read an
+    earlier run's sink), and release_persisted() removes those dirs."""
+    import glob
+    import json
+    import os
+    import tempfile
+
+    from ai_knowledge_etl_spark.registry import REGISTRY
+    from ai_knowledge_etl_spark.session import release_persisted
+
+    pattern = os.path.join(tempfile.gettempdir(), "etl_ssj_*")
+    qd = REGISTRY["stream-stream-interval-join"]
+    dirs, query_ids, rows = [], [], []
+    for _ in range(2):
+        before = set(glob.glob(pattern))
+        df = qd.spark(spark, sf_dir)
+        new = set(glob.glob(pattern)) - before
+        assert len(new) == 1, "the build did not stage a new streaming run"
+        workdir = new.pop()
+        ckpt = os.path.join(workdir, "ckpt")
+        # a started query records its id in the checkpoint and commits
+        # its first micro-batch there
+        with open(os.path.join(ckpt, "metadata")) as f:
+            query_ids.append(json.load(f)["id"])
+        assert os.path.exists(os.path.join(ckpt, "commits", "0"))
+        rows.append(sorted(map(tuple, df.collect())))
+        dirs.append(workdir)
+    assert query_ids[0] != query_ids[1]
+    assert rows[0] and rows[0] == rows[1]
+    release_persisted()
+    assert not any(os.path.exists(d) for d in dirs)
+
+
 @pytest.mark.parametrize("profile", ["local-jvm", "cluster"])
 def test_state_store_profile_both_paths_green(
     spark, sf_dir, tmp_path, profile
