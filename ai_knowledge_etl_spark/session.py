@@ -51,6 +51,9 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", aqe)
         .config("spark.sql.adaptive.skewJoin.enabled", aqe)
         .config("spark.sql.session.timeZone", "UTC")
+        # JVM case mapping for lower/upper: the ICU path's first call per JVM
+        # builds a title-case table over all 1.1M code points (docs/PERF.md)
+        .config("spark.sql.icu.caseMappings.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")

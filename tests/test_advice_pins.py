@@ -109,7 +109,9 @@ def test_prepare_session_pythonpath_ordering(spark, monkeypatch):
 
 def _write_events(path: str, rows: list[tuple[str, str, float]]) -> None:
     """rows: (ts_literal, event_type, value). Writes the full 6-column
-    events schema the loaders expect."""
+    events schema the loaders expect (catalog.SCHEMAS["events"]): bare
+    VALUES would give INTEGER ids and a DECIMAL value, and Spark reads a
+    DECIMAL column requested as DOUBLE as its unscaled integer."""
     con = duckdb.connect()
     values = ", ".join(
         f"({i}, TIMESTAMP '{ts}', {i % 5}, '{et}', {v}, '{{}}')"
@@ -118,7 +120,10 @@ def _write_events(path: str, rows: list[tuple[str, str, float]]) -> None:
     con.execute(
         f"""
         COPY (
-          SELECT * FROM (VALUES {values})
+          SELECT event_id::BIGINT AS event_id, ts,
+                 user_id::BIGINT AS user_id, event_type,
+                 value::DOUBLE AS value, props
+          FROM (VALUES {values})
             t(event_id, ts, user_id, event_type, value, props)
         ) TO '{os.path.join(path, "events.parquet")}' (FORMAT PARQUET)
         """

@@ -207,3 +207,23 @@ def test_sniff_bytes_edge_cases():
     assert sniff_bytes(b"\xe9caf") == "latin-1"  # bare latin-1 e-acute
     assert sniff_bytes("文".encode()[:2]) == "latin-1"  # truncated seq
     assert sniff_bytes(b"\x80\x80") == "latin-1"  # lone continuations
+
+
+def test_case_mapping_is_jvm_and_matches_python(spark, sf_dir):
+    """get_spark turns the ICU case mappings off (docs/PERF.md); stream
+    clones inherit that, and lower/upper still agree with Python on
+    Latin-1, the Greek final sigma and U+0130."""
+    from ai_knowledge_etl_spark.registry.streaming import _stream_join_session
+
+    key = "spark.sql.icu.caseMappings.enabled"
+    clone = _stream_join_session(spark, load_table(spark, sf_dir, "events"))
+    assert spark.conf.get(key) == "false"
+    assert clone.conf.get(key) == "false"
+
+    words = ["Hello, World 42", "ÀÉÎÕÜß", "ΟΔΟΣ", "İstanbul", "İ"]
+    rows = (
+        spark.createDataFrame([(w,) for w in words], "w string")
+        .select("w", F.lower("w").alias("lo"), F.upper("w").alias("up"))
+        .collect()
+    )
+    assert [(r.lo, r.up) for r in rows] == [(w.lower(), w.upper()) for w in words]

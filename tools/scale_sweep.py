@@ -33,12 +33,13 @@ import sys
 import time
 
 import duckdb
+from pyspark.sql.types import StructType
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ai_knowledge_etl_spark.registry import REGISTRY, oracle_of
 from ai_knowledge_etl_spark.session import get_spark
-from ai_knowledge_etl_spark.sources.catalog import TABLES
+from ai_knowledge_etl_spark.sources.catalog import SCHEMAS, TABLES
 
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -364,6 +365,19 @@ def generate(
     )
 
 
+def check_schemas(spark, out_dir: str) -> None:
+    """Every synthesized table must carry the footer schema the engine pins
+    (catalog.SCHEMAS): load_table reads with it instead of inferring, so a
+    type the DuckDB COPY drifted to would be misread, not rejected."""
+    for t in TABLES:
+        path = os.path.join(out_dir, f"{t}.parquet")
+        if os.path.exists(path):
+            got = spark.read.parquet(path).schema
+            assert got == StructType.fromDDL(SCHEMAS[t]), (
+                f"{path}: {got.simpleString()}"
+            )
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--mult", type=int, default=10)
@@ -462,6 +476,7 @@ def main() -> None:
         return
 
     spark = get_spark()
+    check_schemas(spark, args.out)
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from difftest import run_one  # same comparator as the pre-commit gate
